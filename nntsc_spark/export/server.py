@@ -25,15 +25,21 @@ Reference behaviors kept:
 
 from __future__ import annotations
 
+import queue
 import socket
 import threading
+import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import collection_schema, list_collections
+from ..catalog import (
+    collection_schema,
+    list_collections,
+    select_streams_by_collection,
+)
 from ..operators.aggregate import select_aggregated_data
 from ..operators.labels import build_label_map
 from ..operators.matrix import (
@@ -83,22 +89,20 @@ class _ClientTx:
     """
 
     def __init__(self, sock: socket.socket) -> None:
-        import queue as _queue
-
         self.sock = sock
-        self.q: "_queue.Queue[bytes | None]" = _queue.Queue(LIVE_QUEUE_CAP)
+        self.q: "queue.Queue[bytes | None]" = queue.Queue(LIVE_QUEUE_CAP)
         self.dead = False
         self._thread = threading.Thread(target=self._drain, daemon=True)
         self._thread.start()
 
-    def send(self, frame: bytes) -> None:
-        import queue as _queue
-
+    def send(self, frame: bytes) -> bool:
+        """Enqueue ``frame``; False when the client is gone or dropped."""
         if self.dead:
-            return
+            return False
         try:
             self.q.put(frame, True, SEND_TIMEOUT)
-        except _queue.Full:
+            return True
+        except queue.Full:
             # reference: "Client queue has filled up!" -> drop the client.
             # shutdown() (not just close()) wakes the reader thread blocked
             # in recv, whose finally-block then reaps the subscriptions —
@@ -113,6 +117,7 @@ class _ClientTx:
                 self.sock.close()
             except OSError:
                 pass
+            return False
 
     def close(self) -> None:
         self.dead = True
@@ -228,14 +233,11 @@ class ExportServer:
         self._announce_gen = 0
         self._lock = threading.Lock()
         self._stop = threading.Event()
-        self._threads: list[threading.Thread] = []
 
     # -- lifecycle ---------------------------------------------------------
 
     def start(self) -> None:
-        t = threading.Thread(target=self._accept_loop, daemon=True)
-        t.start()
-        self._threads.append(t)
+        threading.Thread(target=self._accept_loop, daemon=True).start()
 
     def stop(self) -> None:
         self._stop.set()
@@ -247,9 +249,9 @@ class ExportServer:
                 sock, _ = self._srv.accept()
             except OSError:
                 return
-            t = threading.Thread(target=self._client_loop, args=(sock,), daemon=True)
-            t.start()
-            self._threads.append(t)
+            threading.Thread(
+                target=self._client_loop, args=(sock,), daemon=True
+            ).start()
 
     def _client_loop(self, sock: socket.socket) -> None:
         """Per-client reader feeding a small query-worker pool.
@@ -326,23 +328,44 @@ class ExportServer:
         except Exception as e:  # report, keep the connection
             self._send(sock, Msg.ERROR, {"error": str(e)})
 
-    def _send(self, sock: socket.socket, mtype: Msg, body: object) -> None:
+    def _send(self, sock: socket.socket, mtype: Msg, body: object) -> bool:
         """Enqueue one whole frame on the client's bounded send queue.
 
         Never blocks on the client's socket (a stalled client fills its own
         queue and gets dropped — see _ClientTx); clients are fully isolated
-        from each other.  A send after the client is gone is a no-op; the
-        reader loop reaps its subscriptions.
+        from each other.  A send after the client is gone is a no-op that
+        returns False, so multi-frame replies can stop pulling rows for
+        nobody; the reader loop reaps its subscriptions.
         """
         with self._lock:
             tx = self._tx.get(sock)
         if tx is not None:
-            tx.send(pack(mtype, body))
-            return
+            return tx.send(pack(mtype, body))
         try:  # sockets outside a client loop (tests, internal probes)
             sock.sendall(pack(mtype, body))
+            return True
         except OSError:
-            pass
+            return False
+
+    def _send_blocks(
+        self, sock: socket.socket, mtype: Msg, head: dict, key: str,
+        df: DataFrame, size: int,
+    ) -> None:
+        """Frame ``df``'s rows as ``{**head, key: block, "more": ...}``:
+        full ``size``-row blocks with more=True, then one last block,
+        possibly empty, with more=False (exporter.py:434-445, 641-657).
+        toLocalIterator keeps one block driver-side (the reference's cursor
+        fetchmany, dbselect.py:853-880); the loop stops at the first block
+        the client is no longer there to receive."""
+        block: list[dict] = []
+        for row in df.toLocalIterator():
+            block.append(row.asDict())
+            if len(block) >= size:
+                frame = {**head, key: block, "more": True}
+                if not self._send(sock, mtype, frame):
+                    return
+                block = []
+        self._send(sock, mtype, {**head, key: block, "more": False})
 
     # -- dispatch ----------------------------------------------------------
 
@@ -399,28 +422,17 @@ class ExportServer:
             # register_collection at :1294-1302)
             with self._lock:
                 self._interest.setdefault(body["collection"], set()).add(sock)
-            # toLocalIterator + block framing: the streams dimension is
-            # usually small, but a collection with hundreds of thousands
-            # of streams must not materialize driver-side (reference
-            # pages this via minid batches, exporter.py:641-657)
-            block: list[dict] = []
-            for row in streams.where(
-                f"stream_id > {int(minid)}"
-            ).toLocalIterator():
-                block.append(row.asDict())
-                if len(block) >= STREAMS_BATCH_ROWS:
-                    self._send(
-                        sock,
-                        Msg.STREAMS,
-                        {"collection": body["collection"],
-                         "streams": block, "more": True},
-                    )
-                    block = []
-            self._send(
+            # block framing: the streams dimension is usually small, but a
+            # collection with hundreds of thousands of streams must not
+            # materialize driver-side (reference pages this via minid
+            # batches, exporter.py:641-657)
+            self._send_blocks(
                 sock,
                 Msg.STREAMS,
-                {"collection": body["collection"], "streams": block,
-                 "more": False},
+                {"collection": body["collection"]},
+                "streams",
+                select_streams_by_collection(streams, minid),
+                STREAMS_BATCH_ROWS,
             )
 
     # -- query timeout (admission) ------------------------------------------
@@ -487,18 +499,19 @@ class ExportServer:
     ) -> dict[str, int]:
         """Stream per-label history in flush-sized blocks; returns last ts
         per label.  Uses toLocalIterator so the driver never holds the full
-        result (O6 bounded-memory delivery)."""
+        result (O6 bounded-memory delivery), and stops at the first flush
+        the client is no longer there to receive."""
         last_ts: dict[str, int] = {}
         pending: dict[str, list[dict]] = {}
         freqs: dict[str, int] = {}
 
-        def flush(label: str, more: bool) -> None:
+        def flush(label: str, more: bool) -> bool:
             rows = pending.pop(label, [])
             if label not in freqs:
                 freqs[label] = estimate_frequency_rows(
                     [r["timestamp"] for r in rows], binsize or None
                 )
-            self._send(
+            return self._send(
                 sock,
                 Msg.HISTORY,
                 {
@@ -518,7 +531,8 @@ class ExportServer:
             pending.setdefault(label, []).append(d)
             last_ts[label] = max(last_ts.get(label, 0), d["timestamp"] or 0)
             if len(pending[label]) >= HISTORY_FLUSH_ROWS:
-                flush(label, more=True)
+                if not flush(label, more=True):
+                    return last_ts
         # terminate EVERY label that shipped anything, not just those with
         # a partial block pending: a label whose row count is an exact
         # multiple of the flush size left pending empty after its
@@ -529,15 +543,33 @@ class ExportServer:
             flush(label, more=False)
         return last_ts
 
-    def _label_map(self, labels: dict[str, list[int]]):
-        return build_label_map(self.spark, labels)
+    def _serve_history(
+        self, sock: socket.socket, colname: str, labels, df: DataFrame,
+        binsize: int, start, stop,
+    ) -> dict[str, int] | None:
+        """Ship ``df`` as history under the query timeout, then end every
+        label with HISTORY_DONE carrying its last shipped ts
+        (exporter.py:907-971).  Returns those ts per label, or None after
+        a timeout, when _cancel_history has sent the terminators instead."""
+        try:
+            with self._query_guard():
+                last = self._ship_history(sock, colname, df, binsize)
+        except QueryTimeout:
+            self._cancel_history(sock, colname, labels, start, stop)
+            return None
+        for label in labels:
+            self._send(
+                sock,
+                Msg.HISTORY_DONE,
+                {"collection": colname, "label": label,
+                 "last_ts": last.get(label, 0)},
+            )
+        return last
 
     def _default_window(self, body) -> tuple[int, int]:
         """P5: stop defaults to now, start to stop - 24 h when omitted
         (libnntsc/dbselect.py:263-267)."""
-        import time as _time
-
-        stop = body.get("stop") or int(_time.time())
+        stop = body.get("stop") or int(time.time())
         start = body.get("start") or stop - 86400
         return start, stop
 
@@ -561,47 +593,32 @@ class ExportServer:
             )
 
     def _handle_aggregate(self, sock: socket.socket, body) -> None:
-        import time as _time
-
         colname = body["collection"]
         fact = self.collections[colname]["fact"]
-        now = int(_time.time())
+        now = int(time.time())
         if body.get("start") is None or body["start"] >= now:
             self._empty_history(sock, colname, body["labels"], now)
             return
         start, stop = self._default_window(body)
+        binsize = body.get("binsize", 300)
         out = select_aggregated_data(
             fact,
-            self._label_map(body["labels"]),
+            build_label_map(self.spark, body["labels"]),
             body["aggcols"],
             start,
             stop,
             body.get("groupcols", ()),
-            body.get("binsize", 300),
+            binsize,
         )
-        try:
-            with self._query_guard():
-                last = self._ship_history(
-                    sock, colname, out, body.get("binsize", 300)
-                )
-        except QueryTimeout:
-            self._cancel_history(sock, colname, body["labels"], start, stop)
-            return
-        for label in body["labels"]:
-            self._send(
-                sock,
-                Msg.HISTORY_DONE,
-                {"collection": colname, "label": label,
-                 "last_ts": last.get(label, 0)},
-            )
+        self._serve_history(
+            sock, colname, body["labels"], out, binsize, start, stop
+        )
 
     def _handle_matrix(self, sock: socket.socket, body) -> None:
-        import time as _time
-
         colname = body["collection"]
         coll = self.collections[colname]
         start, stop = body["start"], body["stop"]
-        now = int(_time.time())
+        now = int(time.time())
         if start is None or start >= now:
             self._empty_history(sock, colname, body["labels"], now)
             return
@@ -624,7 +641,7 @@ class ExportServer:
             # influx.py:384-394) — never touches the raw fact
             out = select_matrix_from_stored(
                 stored,
-                self._label_map(body["labels"]),
+                build_label_map(self.spark, body["labels"]),
                 body["value_cols"],
                 start,
                 stop,
@@ -633,38 +650,25 @@ class ExportServer:
         else:
             out = select_matrix_data(
                 coll["fact"],
-                self._label_map(body["labels"]),
+                build_label_map(self.spark, body["labels"]),
                 body["value_cols"],
                 start,
                 stop,
             )
-        # toLocalIterator + block framing: the driver never holds more than
-        # one flush block of the matrix (reference semantics: cursor
-        # fetchmany, dbselect.py:853-880).  collect() here was the last
-        # code path that materialized a whole result in a driver list
-        # (r6 verdict task); matrix rows are per-(label, bin) so a wide
-        # label set over a long range is genuinely unbounded.
-        block: list[dict] = []
+        # block framing: matrix rows are per-(label, bin), so a wide label
+        # set over a long range is genuinely unbounded
         try:
             with self._query_guard():
-                for row in out.toLocalIterator():
-                    block.append(row.asDict())
-                    if len(block) >= HISTORY_FLUSH_ROWS:
-                        self._send(
-                            sock,
-                            Msg.HISTORY,
-                            {"collection": colname, "matrix": block,
-                             "more": True},
-                        )
-                        block = []
+                self._send_blocks(
+                    sock,
+                    Msg.HISTORY,
+                    {"collection": colname},
+                    "matrix",
+                    out,
+                    HISTORY_FLUSH_ROWS,
+                )
         except QueryTimeout:
             self._cancel_history(sock, colname, body["labels"], start, stop)
-            return
-        self._send(
-            sock,
-            Msg.HISTORY,
-            {"collection": colname, "matrix": block, "more": False},
-        )
 
     def _release_live(self, sub: Subscription) -> None:
         """Drain a subscription's buffered live rows, then unblock direct
@@ -711,9 +715,7 @@ class ExportServer:
         # exporter.py:284-293: start 0/None means "from now" -> live-only
         # subscription with an empty history replay (the live registration
         # above keeps the ORIGINAL start bound, exporter.py:876-891)
-        import time as _time
-
-        now = int(_time.time())
+        now = int(time.time())
         hist_start = body.get("start") or now
         if hist_start >= now:
             self._empty_history(sock, colname, labels, hist_start)
@@ -726,7 +728,7 @@ class ExportServer:
             # tail still carries raw rows
             out = select_aggregated_data(
                 fact,
-                self._label_map(labels),
+                build_label_map(self.spark, labels),
                 merge_aggregators(body.get("columns") or [], aggs),
                 body.get("start"),
                 body.get("stop"),
@@ -736,25 +738,15 @@ class ExportServer:
         else:
             out = select_data(
                 fact,
-                self._label_map(labels),
+                build_label_map(self.spark, labels),
                 body.get("columns") or [],
                 body.get("start"),
                 body.get("stop"),
             )
-        timed_out = False
-        try:
-            with self._query_guard():
-                last = self._ship_history(sock, colname, out, 0)
-        except QueryTimeout:
-            # _cancel_history already sends HISTORY_DONE per label — the
-            # loop below must not run again or every label gets a
-            # duplicate terminator and the client's frame accounting
-            # desyncs (r5 review finding)
-            self._cancel_history(
-                sock, colname, labels, body.get("start"), body.get("stop")
-            )
-            last = {}
-            timed_out = True
+        # None after a timeout: no seam bounds, the labels are closed
+        last = self._serve_history(
+            sock, colname, labels, out, 0, body.get("start"), body.get("stop")
+        ) or {}
         # per-stream seam bounds: each stream inherits ITS label's history
         # end, so a lagging stream's live rows are never dropped against
         # another label's newer history (reference exporter.py:1026-1052).
@@ -769,14 +761,6 @@ class ExportServer:
                 sub.last_by_stream[int(sid)] = (
                     last[label] if prev is None else max(prev, last[label])
                 )  # a stream in several labels keeps its newest bound
-        if not timed_out:
-            for label in labels:
-                self._send(
-                    sock,
-                    Msg.HISTORY_DONE,
-                    {"collection": colname, "label": label,
-                     "last_ts": last.get(label, 0)},
-                )
         # release buffered live rows past the seam (exporter.py:907-971),
         # ordering-safe vs concurrent publish_live calls
         self._release_live(sub)

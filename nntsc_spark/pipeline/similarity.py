@@ -25,8 +25,6 @@ import logging
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import md5_long
-
 log = logging.getLogger(__name__)
 
 
@@ -221,10 +219,11 @@ def brute_force_topk(
 
 def plane_weights(plane: int, dims: int) -> list[float]:
     """Hyperplane ``plane``'s weights in [-1, 1]^dims, derived from
-    md5(plane:dim) — the exact values :func:`hyperplane_expr`'s JVM md5
-    path constant-folds to (and what the DuckDB oracles replay).  Deriving
-    them driver-side keeps plan construction at O(tables) py4j calls
-    instead of O(tables*bits*dims) Column allocations."""
+    md5(plane:dim) — a deterministic pseudo-random hyperplane that any
+    engine able to md5 can rebuild (the DuckDB oracles replay it).
+    Deriving the weights driver-side keeps plan construction at
+    O(tables) py4j calls instead of O(tables*bits*dims) Column
+    allocations."""
     return [
         (int(hashlib.md5(f"{plane}:{d}".encode()).hexdigest()[:15], 16)
          % 2001 - 1000)
@@ -253,31 +252,6 @@ def signature_sql(vec_col: str, table: int, bits: int, dims: int) -> str:
         )
         terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p}L ELSE 0L END)")
     return " + ".join(terms)
-
-
-def hyperplane_expr(vec: Column, plane: int, dims: int) -> Column:
-    """Sign bit of <vec, h_plane> with h derived from md5(plane:dim) — a
-    deterministic pseudo-random hyperplane in [-1, 1]^dims, identical on any
-    engine that can md5."""
-    weights = F.array(
-        *[
-            (
-                (md5_long(F.lit(f"{plane}:{d}")) % 2001 - 1000) / F.lit(1000.0)
-            ).alias(f"w{d}")
-            for d in range(dims)
-        ]
-    )
-    return (dot_expr(vec, weights) > 0).cast("int")
-
-
-def lsh_signature(vec: Column, bits: int, dims: int) -> Column:
-    """B-bit bucket id from B hyperplane sign bits."""
-    sig = F.lit(0).cast("long")
-    for p in range(bits):
-        sig = sig + F.shiftleft(
-            hyperplane_expr(vec, p, dims).cast("long"), p
-        )
-    return sig
 
 
 def lsh_topk(
@@ -950,21 +924,6 @@ def unrolled_dot_sql(
         f"CASE WHEN size({a_sql}) = {n} AND size({b_sql}) = {n} "
         f"THEN 0D + {terms} ELSE {_fold_dot_sql(a_sql, b_sql)} END"
     )
-
-
-def _lit_dot_sqls(vec_sql: str, lits: list[float]) -> tuple[str, str]:
-    """(unrolled, fold) straight-line dot of a column ref against an
-    inlined literal vector — the lambda is ``double(x) * y`` with y
-    already a double literal, matching the quantizer folds."""
-    arr = "array(" + ", ".join(f"{x!r}D" for x in lits) + ")"
-    fold = (
-        f"aggregate(zip_with({vec_sql}, {arr}, "
-        f"(x, y) -> double(x) * y), 0D, (acc, x) -> acc + x)"
-    )
-    unrolled = "0D + " + " + ".join(
-        f"(double({vec_sql}[{i}]) * {x!r}D)" for i, x in enumerate(lits)
-    )
-    return unrolled, fold
 
 
 def vnorm_sql(vec_col: str, dims: int | None = None) -> str:

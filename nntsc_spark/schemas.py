@@ -602,12 +602,3 @@ ASPATHS_SCHEMA = StructType(
         _f("responses", LongType()),
     ]
 )
-
-
-def get_collection(name: str) -> CollectionSchema:
-    try:
-        return COLLECTIONS[name]
-    except KeyError:
-        raise KeyError(
-            f"unknown collection {name!r}; known: {sorted(COLLECTIONS)}"
-        ) from None

@@ -21,19 +21,6 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def _env_int(name: str) -> int:
-    """Integer env override, or 0 when unset/blank/garbage — a malformed
-    value must not make every get_spark() raise a bare ValueError."""
-    raw = (os.environ.get(name) or "").strip()
-    try:
-        return int(raw) if raw else 0
-    except ValueError:
-        import warnings
-
-        warnings.warn(f"ignoring non-integer {name}={raw!r}")
-        return 0
-
-
 def get_spark(
     app_name: str = "sparktsc",
     master: str | None = None,
@@ -59,10 +46,11 @@ def get_spark(
         # merges small post-shuffle partitions at runtime, so wide
         # defaults cost small queries nothing.  On a real cluster raise
         # this to ~2-3x total cores or beyond; it is an upper bound, not
-        # a target.
+        # a target.  A sweep of {64, 128, 512} at 32 cores moved nothing
+        # outside the host's run-to-run band (OPTIMIZATION_r16.md).
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(_env_int("SPARK_GRAFT_INITIAL_PARTITIONS") or 16 * int(cpus)),
+            str(16 * int(cpus)),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # NOT enabled: spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold
@@ -88,7 +76,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # shuffle/spill/broadcast block codec.  Default lz4, MEASURED
+        # shuffle/spill/broadcast block codec: lz4, MEASURED
         # (SCALING.md r15, tools/planted_probe.py): zstd is ~14% faster
         # on the planted x100 cell but a wash (500.0 vs 496.5 s) at the
         # spill-bound x1000 decade that motivated the experiment — the
@@ -96,10 +84,7 @@ def get_spark(
         # eats what its ratio saves at disk speed.  Counters bit-
         # identical under both.  lz4 stays for artifact comparability;
         # re-measure on a cluster where network bytes also pay.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        .config("spark.io.compression.codec", "lz4")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -138,6 +138,9 @@ class CollectionIngestor:
                 ).toLocalIterator()
             ]
             self.exporter.announce_streams(self.collection, new_rows)
+        # nothing below reads the dimension; a cache left behind would be
+        # held by the CacheManager for the rest of the session, one per batch
+        streams.unpersist()
         if self.stats_path:
             self._update_stats(fact)
         if self.exporter is not None and self.collection:
@@ -206,6 +209,7 @@ class CollectionIngestor:
         merged = merged.cache()
         merged.count()
         write_dimension(merged, self.stats_path)
+        merged.unpersist()
 
     def read_fact(self) -> DataFrame:
         return read_fact(self.spark, self.fact_path)

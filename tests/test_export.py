@@ -1658,3 +1658,117 @@ def test_unsubscribe_during_history_replay(spark, monkeypatch):
         s.close()
     finally:
         srv.stop()
+
+
+def _read_blocks(sock, mtype, key):
+    """Frames of one block-framed reply, up to and including more=False."""
+    frames = []
+    while True:
+        got, body = read_message(sock)
+        assert got == mtype
+        frames.append((len(body[key]), body["more"]))
+        if body["more"] is False:
+            return frames
+
+
+def test_block_framing_exact_multiple_ends_with_empty_frame(spark, monkeypatch):
+    """STREAMS and MATRIX replies whose row count is an exact multiple of
+    the block size: every full block goes out with more=True, then one
+    empty more=False terminator (reference exporter.py:434-445,
+    641-657)."""
+    import nntsc_spark.export.server as srv_mod
+
+    monkeypatch.setattr(srv_mod, "STREAMS_BATCH_ROWS", 3)
+    monkeypatch.setattr(srv_mod, "HISTORY_FLUSH_ROWS", 4)
+    n = 8  # streams = labels = matrix rows (one bin per label)
+    fact = spark.createDataFrame(
+        [(i, 100, float(i)) for i in range(1, n + 1)],
+        "stream_id long, timestamp long, value double",
+    )
+    streams = spark.createDataFrame(
+        [(i, "s", f"d{i}") for i in range(1, n + 1)],
+        "stream_id long, source string, destination string",
+    )
+    srv = ExportServer(spark, {"amp-icmp": {"fact": fact, "streams": streams}})
+    srv.start()
+    try:
+        s = _connect(srv)
+        s.sendall(pack(Msg.REQUEST, {"request": int(Req.STREAMS),
+                                     "collection": "amp-icmp", "minid": 2}))
+        assert _read_blocks(s, Msg.STREAMS, "streams") == [
+            (3, True), (3, True), (0, False)
+        ]
+        s.sendall(
+            pack(
+                Msg.MATRIX,
+                {"collection": "amp-icmp",
+                 "labels": {f"L{i}": [i] for i in range(1, n + 1)},
+                 "value_cols": ["value"], "start": 0, "stop": 7200},
+            )
+        )
+        assert _read_blocks(s, Msg.HISTORY, "matrix") == [
+            (4, True), (4, True), (0, False)
+        ]
+        s.close()
+    finally:
+        srv.stop()
+
+
+def test_history_stops_converting_rows_after_client_disconnect(
+    spark, monkeypatch
+):
+    """A client that disconnects mid-history stops the replay at the next
+    flush: the server leaves the rest of toLocalIterator unread instead of
+    pulling and converting every remaining row for nobody.  Each row
+    conversion is slowed so the replay is still running when the
+    disconnect lands."""
+    import nntsc_spark.export.server as srv_mod
+    from pyspark.sql import Row
+
+    n = 2000
+    monkeypatch.setattr(srv_mod, "HISTORY_FLUSH_ROWS", 5)
+    converted = []
+    real_as_dict = Row.asDict
+
+    def slow_as_dict(self, recursive=False):
+        converted.append(1)
+        time.sleep(0.001)
+        return real_as_dict(self, recursive)
+
+    monkeypatch.setattr(Row, "asDict", slow_as_dict)
+    fact = spark.createDataFrame(
+        [(1, 100 + i, float(i)) for i in range(n)],
+        "stream_id long, timestamp long, value double",
+    ).repartition(16)
+    streams = spark.createDataFrame(
+        [(1, "src", "d1")], "stream_id long, source string, destination string"
+    )
+    srv = ExportServer(spark, {"amp-icmp": {"fact": fact, "streams": streams}})
+    done = threading.Event()
+    real_ship = srv._ship_history
+
+    def ship(*args):
+        try:
+            return real_ship(*args)
+        finally:
+            done.set()
+
+    srv._ship_history = ship
+    srv.start()
+    try:
+        s = _connect(srv)
+        s.sendall(
+            pack(
+                Msg.AGGREGATE,
+                {"collection": "amp-icmp", "labels": {"L": [1]},
+                 "aggcols": [("value", "avg")], "start": 1,
+                 "stop": 100 + n, "binsize": 1},
+            )
+        )
+        mtype, body = read_message(s)
+        assert mtype == Msg.HISTORY and len(body["history"]) == 5
+        s.close()
+        assert done.wait(timeout=60)
+        assert len(converted) < n
+    finally:
+        srv.stop()

@@ -1830,3 +1830,48 @@ def test_accepted_schema_sidecar_follows_evolution(spark, tmp_path):
     assert not (pathlib.Path(str(ded.out_path)) / "batch=2").exists()
     # the table is still fully servable after the rejected batch
     assert {r.doc_id for r in ded.corpus().collect()} == {1, 2}
+
+
+def test_ingest_batches_leave_no_persisted_rdds_behind(spark, tmp_path):
+    """Per-batch caches are released: after 8 micro-batches with a live
+    exporter wired (announce + fan-out + stats), the persisted-RDD count
+    stays bounded instead of growing by the dimension and stats caches
+    every batch.  A JVM GC lets the ContextCleaner free what nothing
+    references any more (each batch's localCheckpoint); a cache() the
+    batch forgot stays pinned by the CacheManager."""
+    import gc
+    import time
+
+    from nntsc_spark.export.server import ExportServer
+
+    empty = spark.createDataFrame([], "stream_id long, timestamp long")
+    srv = ExportServer(spark, {"amp-icmp": {"fact": empty, "streams": empty}})
+    sc = spark.sparkContext._jsc.sc()
+    ing = CollectionIngestor(
+        spark,
+        parser=lambda df: df,
+        unique_cols=["source", "target"],
+        fact_path=str(tmp_path / "fact"),
+        streams_path=str(tmp_path / "streams"),
+        stats_path=str(tmp_path / "stats"),
+        collection="amp-icmp",
+        exporter=srv,
+    )
+    try:
+        base = sc.getPersistentRDDs().size()
+        for b in range(8):
+            raw = spark.createDataFrame(
+                [("amp", f"d{(3 * b + i) % 7}", 100 * b + i, float(i))
+                 for i in range(6)],
+                "source string, target string, timestamp long, value double",
+            )
+            ing.process_batch(raw, b)
+        for _ in range(50):
+            gc.collect()
+            spark._jvm.System.gc()
+            if sc.getPersistentRDDs().size() - base <= 2:
+                break
+            time.sleep(0.2)
+        assert sc.getPersistentRDDs().size() - base <= 2
+    finally:
+        srv.stop()

@@ -14,8 +14,10 @@ Each invocation is ONE COLD run in this process's fresh session: the
 r15 seam memo makes a warm in-session rep reuse the materialized CC
 result, so "min-of-2 warm" now measures the memo, not the operator —
 cold cells in fresh JVMs are the only like-for-like methodology left
-for this table (run the script N times and take the min).  Codec
-experiments set SPARK_GRAFT_IO_CODEC before launch.
+for this table (run the script N times and take the min).  The
+session's codec is the constant lz4 (session.py); a codec experiment
+adds ``extra_conf={"spark.io.compression.codec": ...}`` to the get_spark
+call below.
 
 Usage: python tools/planted_probe.py FACTOR BITS TABLES
 """

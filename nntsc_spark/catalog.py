@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import COLLECTIONS
+from .session import local_frame
 
 
 def list_collections(spark: SparkSession) -> DataFrame:
@@ -26,8 +27,8 @@ def list_collections(spark: SparkSession) -> DataFrame:
         (i + 1, cs.module, cs.modsubtype, cs.stream_table, cs.data_table)
         for i, (name, cs) in enumerate(sorted(COLLECTIONS.items()))
     ]
-    return spark.createDataFrame(
-        rows, "id long, module string, modsubtype string, "
+    return local_frame(
+        spark, rows, "id long, module string, modsubtype string, "
         "streamtable string, datatable string"
     )
 

@@ -9,14 +9,19 @@ Spark-first shape: the label map is a tiny dimension — build it as a local
 DataFrame and **broadcast hash join** it to the fact table.  This replaces
 both the CASE expression and the per-label query loop (the reference runs one
 query per label at dbselect.py:344/495; here all labels execute as one job).
-At 100 TB the broadcast join adds no shuffle on the fact side and the
-``stream_id`` membership predicate still pushes down to the scan.
+At 100 TB the broadcast join adds no shuffle on the fact side.  It does not
+prune the scan by stream: the executed plan pushes only the time range and
+``IsNotNull`` on the stream column to parquet, and the ``stream_id``
+membership test runs in the join, after the scan has read every row of the
+time range.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 LABEL_COL = "nntsclabel"
 
@@ -36,7 +41,7 @@ def build_label_map(
             if sid not in seen:
                 rows.append((int(sid), label))
                 seen.add(sid)
-    return spark.createDataFrame(rows, schema=f"stream_id long, {LABEL_COL} string")
+    return local_frame(spark, rows, f"stream_id long, {LABEL_COL} string")
 
 
 def apply_labels(fact: DataFrame, label_map: DataFrame) -> DataFrame:

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .text import token_count_expr, tokens_expr
 
 
@@ -207,8 +208,8 @@ def phrase_hits_many(
     if not cleaned:
         raise ValueError("phrase_hits_many requires non-empty phrases")
     spark = docs.sparkSession
-    pdf = spark.createDataFrame(
-        [(p,) for p in sorted(set(cleaned))], "phrase string"
+    pdf = local_frame(
+        spark, [(p,) for p in sorted(set(cleaned))], "phrase string"
     )
     text = F.col(text_col)
     removed = F.replace(text, F.col("phrase"), F.lit(""))

@@ -25,26 +25,9 @@ import logging
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 log = logging.getLogger(__name__)
-
-
-def local_df_1p(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """Small driver-local rows as a SINGLE-partition DataFrame.
-
-    ``createDataFrame(list)`` parallelizes into defaultParallelism
-    pickled slices; any downstream single-task consumer (a
-    ``coalesce(1)`` metadata write, most notably) then pays one Python
-    worker round-trip PER SLICE, serially — measured 4.2 s to write a
-    16-row centroid table on local[32] vs 0.36 s with one slice
-    (optimization guide §4: every JVM↔Python crossing has fixed cost;
-    cross once).  Serialization semantics are identical to the plain
-    list path (same pickler, same row verifier) — only the slice count
-    changes, so values and schema are bit-for-bit what
-    ``createDataFrame(rows, schema)`` produces.
-    """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    )
 
 
 #: SQL text -> parsed Column, valid for one SparkContext (see expr_cached)
@@ -1460,7 +1443,7 @@ def _write_assign_stats(
         ).collect()[0]
     stats = {"kind": kind, "n": int(row["n"]),
              "mean_best_cosine": float(row["mean_best"] or 0.0)}
-    out = local_df_1p(
+    out = local_frame(
         assigned.sparkSession,
         [(kind, int(batch_id), stats["n"], stats["mean_best_cosine"])],
         "kind string, batch_id long, n long, mean_best_cosine double",
@@ -1531,7 +1514,7 @@ def ivf_build_index(
 
     with ThreadPoolExecutor(max_workers=1) as pool:
         cents_fut = pool.submit(
-            lambda: local_df_1p(
+            lambda: local_frame(
                 spark,
                 # ACTUAL centroid ids, matching the corpus's cell labels —
                 # the old positional re-labeling (enumerate) made a
@@ -3399,7 +3382,8 @@ def _ivfpq_adc_topk(
     ``element_at`` lookups + an add chain per candidate, then the
     two-stage :func:`_per_query_topk`."""
     spark = codes.sparkSession
-    probe_df = spark.createDataFrame(
+    probe_df = local_frame(
+        spark,
         by_cell_d,
         "query_id long, cell int, luts array<array<double>>",
     )
@@ -3476,7 +3460,7 @@ def _write_ivfpq_stats(
         ).collect()[0]
     stats = {"kind": kind, "n": int(row["n"]),
              "mean_resid_norm": float(row["mean_rnorm"] or 0.0)}
-    out = local_df_1p(
+    out = local_frame(
         codes.sparkSession,
         [(kind, int(batch_id), stats["n"], stats["mean_resid_norm"])],
         "kind string, batch_id long, n long, mean_resid_norm double",
@@ -3606,12 +3590,12 @@ def ivfpq_build_index(
     )
 
     def _write_quantizers() -> None:
-        local_df_1p(
+        local_frame(
             spark,
             [(int(c), [float(x) for x in v]) for c, v in cents],
             "cell_id int, centroid array<double>",
         ).write.mode("overwrite").parquet(f"{path}/centroids")
-        local_df_1p(
+        local_frame(
             spark,
             [
                 (mi, ci, [float(x) for x in center])
@@ -3879,7 +3863,7 @@ def ivfpq_ensure_index(
             # unreadable/foreign fingerprint table -> rebuild below
             pass
     ivfpq_build_index(emb, path, **build_kw)
-    local_df_1p(spark, [(fingerprint,)], "fp string").write.mode(
+    local_frame(spark, [(fingerprint,)], "fp string").write.mode(
         "overwrite"
     ).parquet(f"{path}/fingerprint")
     return True

@@ -10,13 +10,19 @@ settings here are the ones that matter at that scale and are harmless on
 - small shuffle partition count locally; on a real cluster this should be
   ~2-3x total cores or left to AQE's coalescing.
 - Arrow enabled for the (rare) pandas-UDF paths.
+
+It also holds :func:`local_frame`, the one way the engine turns rows built
+on the driver into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -90,3 +96,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Driver-built ``rows`` (tuples) as a DataFrame typed by the DDL
+    ``schema``, shipped to the JVM as one Arrow table.
+
+    ``createDataFrame(list)`` pickles the rows into defaultParallelism
+    slices of a Python RDD and re-serializes them through a Python
+    ``map``, so every job that reads the frame runs one Python-worker
+    task per slice.  That fixed cost dominates tiny tables: an export
+    request's 4-slice label map spent ~1.3 s of task time per job for
+    ~15 ms of CPU, and a 16-row centroid table took 4.2 s to write on
+    local[32] against 0.36 s from a single slice.  An Arrow table
+    becomes a JVM-side local relation (``ParallelCollectionRDD`` under
+    its scan, no ``PythonRDD``), so no job waits on a Python worker:
+    the same centroid write takes 0.30 s on local[4], against 0.52 s
+    from a single pickled slice.
+
+    Values and schema, nullability included, are what
+    ``createDataFrame(rows, schema)`` gives; zero rows give the declared
+    schema over zero partitions.  pyarrow's converter raises on a row
+    of the wrong length, a string in a numeric column, a bool in an
+    integer column or an out-of-range integer, as the list path's
+    verifier does, and also on a number in a string column, which that
+    verifier stores as its ``str()``.  Unlike the verifier it accepts an
+    int in a double column and truncates a float in an integer column,
+    so callers pass ``int()``/``float()`` values.
+    """
+    struct = StructType.fromDDL(schema)
+    arrow = pa.struct(to_arrow_schema(struct))
+    table = pa.Table.from_struct_array(pa.array(rows, type=arrow))
+    return spark.createDataFrame(table, struct)

@@ -24,6 +24,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 POLL_INTERVAL = 30  # seconds (libnntsc/parsers/rrd.py:223-229)
 RETRY_BACKOFF = 10  # seconds (rrd.py:226)
 
@@ -111,7 +113,7 @@ class RRDPoller:
                 advanced[s.filename] = newest
         if not out:
             return None
-        df = self.spark.createDataFrame(out, RAW_SCHEMA)
+        df = local_frame(self.spark, out, RAW_SCHEMA)
         self.last_ts.update(advanced)  # tentative; durable only on commit()
         return df
 

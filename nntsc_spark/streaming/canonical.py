@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 COUNTS_SCHEMA = "tok string, n long"
 PAIRS_SCHEMA = "s1 string, s2 string, dist int"
 
@@ -90,7 +92,7 @@ class CanonicalMapMaintainer:
         except AnalysisException as exc:
             if "PATH_NOT_FOUND" not in str(exc):
                 raise
-            return self.spark.createDataFrame([], schema).select(*cols)
+            return local_frame(self.spark, [], schema)
         return df.where(F.col("batch") < int(batch_id)).select(*cols)
 
     # -- epoch write --------------------------------------------------

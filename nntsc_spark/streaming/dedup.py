@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.dedup import lsh_bands, minhash_signatures, shingles
+from ..session import local_frame
 
 MINHASH_K = 8
 SIG_COLS = [f"mh{i}" for i in range(MINHASH_K)]
@@ -287,7 +288,7 @@ class IncrementalDeduper:
         except AnalysisException as exc:
             if "PATH_NOT_FOUND" not in str(exc):
                 raise
-            return self.spark.createDataFrame([], schema).select(*cols)
+            return local_frame(self.spark, [], self._SCHEMAS[sub])
         return df.where(F.col("batch") < int(batch_id)).select(*cols)
 
     def process_batch(
@@ -577,7 +578,7 @@ class IncrementalSpanIndex:
         except AnalysisException as exc:
             if "PATH_NOT_FOUND" not in str(exc):
                 raise
-            return self.spark.createDataFrame([], self._WIN_SCHEMA)
+            return local_frame(self.spark, [], self._WIN_SCHEMA)
         return df.where(F.col("batch") < int(batch_id)).select(*self._KEYS)
 
     def process_batch(
@@ -666,7 +667,7 @@ class IncrementalSpanIndex:
         except AnalysisException as exc:
             if "PATH_NOT_FOUND" not in str(exc):
                 raise
-            return self.spark.createDataFrame([], self._SPANS_SCHEMA)
+            return local_frame(self.spark, [], self._SPANS_SCHEMA)
         if as_of_batch is not None:
             df = df.where(F.col("batch") <= int(as_of_batch))
         return df.drop("batch")

@@ -1445,7 +1445,13 @@ def test_streaming_gap_detect_closed_and_open_channels(spark, tmp_path):
                                 for r in rs))
         closed = [r for r in snap() if r.stream_id == 2 and not r.open]
         assert [(r.gap_start, r.gap_end) for r in closed] == [(20, 500)]
-        assert len([r for r in snap() if r.open]) == 1
+        # the first outage is reported once; if the resumed stream has
+        # since gone silent past the timeout, its second outage opens
+        # at 500 -- a correct row, whenever the host lets it land
+        opens = [(r.gap_start, r.gap_end) for r in snap() if r.open]
+        assert opens.count((20, None)) == 1
+        assert set(opens) <= {(20, None), (500, None)}
+        assert len(opens) == len(set(opens))
     finally:
         q.stop()
 

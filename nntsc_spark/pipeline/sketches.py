@@ -266,11 +266,16 @@ def hll_estimate(
     zmax = 2 ** (rank_bits + 1)
     grouped = sketch.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("long").alias("n_registers_used"),
-        F.sum(
-            F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), "
-                f"CAST({rank_bits + 1} - max_rho AS INT))"
-            )
+        # 0 over zero registers (a global agg of an empty sketch), so the
+        # linear-counting branch answers 0.0 instead of NULL
+        F.coalesce(
+            F.sum(
+                F.expr(
+                    f"shiftleft(CAST(1 AS BIGINT), "
+                    f"CAST({rank_bits + 1} - max_rho AS INT))"
+                )
+            ),
+            F.lit(0).cast("long"),
         ).alias("_z_used"),
     )
     v = F.lit(m) - F.col("n_registers_used")

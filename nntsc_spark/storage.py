@@ -15,6 +15,10 @@ columnar table per collection:
 Retention (SURVEY.md §2.8 T7): whole date partitions older than the cutoff
 are dropped, mirroring Influx retention policies (influx.py:236-274) — a
 directory delete, not a rewrite.
+
+Streaming state (sketches, dedup indexes, canonical maps) lives in
+:class:`EpochTable`s: one ``batch=N`` partition per foreachBatch epoch,
+with the write, read and compaction contract stated once there.
 """
 
 from __future__ import annotations
@@ -24,8 +28,11 @@ import shutil
 import uuid
 from pathlib import Path
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .session import local_frame
 
 DATE_COL = "date"
 
@@ -390,6 +397,203 @@ def maintain_fact(
     dropped = apply_retention(path, keep_seconds, now)
     compacted = compact_fact(spark, path, target_bytes, now, min_age_seconds)
     return {"dropped": dropped, "compacted": compacted}
+
+
+#: sidecar recording the highest epoch id folded into a table's
+#: ``batch=-1`` sentinel; written atomically with the compacted data
+HORIZON_MARKER = "_compaction_horizon"
+
+
+def compaction_horizon(root) -> int | None:
+    """Highest epoch id folded into ``root``'s ``batch=-1`` sentinel, or
+    None if the table was never compacted (or predates the marker)."""
+    try:
+        return int((Path(root) / HORIZON_MARKER).read_text().strip())
+    except (OSError, ValueError):
+        return None
+
+
+def check_as_of_visible(root, as_of_batch: int | None) -> None:
+    """Raise ValueError when ``as_of_batch`` predates ``root``'s
+    compaction horizon (see :class:`EpochTable`): the prefix it asks for
+    is folded into the sentinel and no longer exists."""
+    if as_of_batch is None:
+        return
+    h = compaction_horizon(root)
+    if h is not None and int(as_of_batch) < h:
+        raise ValueError(
+            f"as_of_batch={int(as_of_batch)} predates the compaction "
+            f"horizon {h} of {root}: epochs <= {h} are folded into the "
+            "batch=-1 sentinel and a historical prefix below it no "
+            f"longer exists — pass as_of_batch >= {h}, or None for the "
+            "full state"
+        )
+
+
+class EpochTable:
+    """Streaming state kept as one ``root/batch=N`` partition per
+    foreachBatch epoch N — the parquet stand-in for the reference's
+    one-transaction-per-batch commit (parsers/amp.py:181-273), under the
+    same single-writer assumption as the rest of this module.
+
+    Contract:
+
+    - WRITE: epoch N OVERWRITES exactly its own ``batch=N`` partition
+      with content that is a deterministic function of (the epoch's rows,
+      the prior partitions).  A foreachBatch retry after a crash, or a
+      double run, rewrites identical files: an epoch is never lost,
+      double-counted or duplicated.
+    - PRIOR: an epoch reads only ``batch < N``, which the overwrite
+      discipline keeps immutable, so a partial write from a failed
+      attempt can never make an epoch collide with itself.  Reads pass
+      the schema EXPLICITLY: a crash can leave a partition holding only an
+      uncommitted ``_temporary/`` (zero data files), where schema
+      inference raises UNABLE_TO_INFER_SCHEMA; with the schema the read
+      returns zero rows and the repairing overwrite runs.  ONLY
+      PATH_NOT_FOUND means "no state yet" (an empty frame of the
+      schema) — probing by read, not ``os.path``, so any filesystem URI
+      works; any other failure (transient store error, corrupt footer)
+      raises, so foreachBatch retries the epoch instead of silently
+      dropping state (a dedup index read as empty admits permanent
+      duplicates).
+    - SERVE: the overwrite of ``batch=N`` is not atomic, so a read
+      concurrent with an in-flight epoch can see it half written.
+      Readers that must be exact while the stream runs pass
+      ``as_of_batch`` = the last COMMITTED epoch id (e.g.
+      ``lastProgress["batchId"] - 1`` off the running query); the
+      ``batch <= as_of_batch`` partition filter prunes the in-flight
+      directory at planning time, before any of its files is opened.
+      ``as_of_batch=None`` reads everything — exact whenever no epoch is
+      mid-write.  A table that does not exist yet serves empty state.
+    - COMPACTION folds the per-epoch partitions into ~target-size files
+      under one ``batch=-1`` sentinel (:data:`COMPACTED_BATCH`): per-
+      commit epochs otherwise leave one file set each forever, and every
+      read pays the file-listing tax on all of history.  Not 0: epochs
+      start at 0, so a stream restarted with a FRESH checkpoint would
+      overwrite a ``batch=0`` merge, while -1 passes every epoch's
+      ``batch < N`` filter and collides with none.  Corollary: ALWAYS
+      compact before restarting a stream with a fresh checkpoint —
+      uncompacted ``batch>=0`` partitions are invisible to the restarted
+      epochs' prior read and are overwritten one by one as the new ids
+      climb past them.  Run it with the stream STOPPED and serves
+      quiesced: Structured Streaming's checkpoint guarantees committed
+      epochs never replay, which is what makes merging them safe, but
+      the swap is not atomic against a concurrent read (``as_of_batch``
+      guards against in-flight EPOCH writes, not against ``compact()``).
+      The rewrite is staged dot-prefixed (invisible to readers) and
+      swapped in with one directory rename behind the same recovery
+      sweep as :func:`compact_fact`, so a crash leaves every row readable
+      exactly once.  Compaction is row-preserving, so any fold a serve
+      path applies (sum, max, distinct) gives the same answer after it.
+    - HORIZON: the highest real epoch id folded into the sentinel is
+      recorded in a ``_compaction_horizon`` sidecar swapped in with the
+      data and carried across re-compactions.  The sentinel cannot be
+      split retroactively — it passes every ``batch <= as_of_batch``
+      filter — so a serve with ``as_of_batch`` below the horizon raises
+      (:func:`check_as_of_visible`) instead of returning the full
+      compacted state as a "prefix"; ``as_of_batch`` at or above it stays
+      exact.
+
+    ``schema`` is the DDL of the data columns (``batch`` is the partition
+    column).  ``None`` means the columns are not known until the first
+    commit: reads infer them, and reading a table that does not exist
+    raises FileNotFoundError, since no empty frame can be built.
+    """
+
+    def __init__(self, spark: SparkSession, root: str, schema: str | None):
+        self.spark = spark
+        self.root = str(root).rstrip("/")
+        self.schema = schema
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        """Commit epoch ``batch_id``: overwrite its own partition."""
+        df.write.mode("overwrite").parquet(f"{self.root}/batch={int(batch_id)}")
+
+    def prior(self, batch_id: int) -> DataFrame:
+        """The state committed by the epochs before ``batch_id``."""
+        return self._epochs(F.col("batch") < int(batch_id))
+
+    def read(self, as_of_batch: int | None = None) -> DataFrame:
+        """The state through epoch ``as_of_batch`` (all of it if None)."""
+        check_as_of_visible(self.root, as_of_batch)
+        if as_of_batch is None:
+            return self._epochs(None)
+        return self._epochs(F.col("batch") <= int(as_of_batch))
+
+    def _epochs(self, keep: F.Column | None) -> DataFrame:
+        """Rows of the epochs whose ``batch`` passes ``keep`` (all if
+        None), without the partition column."""
+        reader = self.spark.read
+        if self.schema is not None:
+            reader = reader.schema(self.schema + ", batch int")
+        try:
+            df = reader.parquet(self.root)
+        except AnalysisException as exc:
+            if "PATH_NOT_FOUND" not in str(exc):
+                raise
+            if self.schema is None:
+                raise FileNotFoundError(
+                    f"no batches committed yet under {self.root}"
+                ) from exc
+            return local_frame(self.spark, [], self.schema)
+        if keep is not None:
+            df = df.where(keep)
+        return df.drop("batch")
+
+    def compact(self, target_bytes: int = 128 << 20) -> bool:
+        """Fold the per-epoch partitions into the ``batch=-1`` sentinel
+        and record the horizon (see the class contract).  Idempotent: a
+        single-partition table already at its file target is skipped.
+        Returns True if the table was rewritten."""
+        import math
+
+        root = Path(self.root)
+        proot = root.parent
+        if not proot.exists():
+            return False
+        _recover_compaction(proot)
+        if not root.exists():
+            return False
+        files = _partition_parquet_files(root)
+        if not files:
+            return False
+        total = sum(f.stat().st_size for f in files)
+        goal = max(1, math.ceil(total / target_bytes))
+        n_batches = len(list(root.glob("batch=*")))
+        if len(files) <= goal and n_batches <= 1:
+            return False
+        # the horizon carries forward: a file-count-only re-fold of an
+        # already-compacted table must not lose it when the old root —
+        # marker included — moves to trash
+        folded = [
+            int(p.name.split("=", 1)[1])
+            for p in root.glob("batch=*")
+            if p.name.split("=", 1)[1].lstrip("-").isdigit()
+        ]
+        carried = compaction_horizon(root)
+        real = [b for b in folded if b >= 0]
+        if carried is not None:
+            real.append(carried)
+        horizon = max(real) if real else None
+        stage = proot / f".compact-stage-{uuid.uuid4().hex[:8]}"
+        self.read().coalesce(goal).write.mode("overwrite").parquet(
+            str(stage / "data")
+        )
+        dest = stage / "part" / f"batch={COMPACTED_BATCH}"
+        dest.mkdir(parents=True)
+        for f in (stage / "data").glob("*.parquet"):
+            os.rename(f, dest / f.name)
+        if horizon is not None:
+            # inside stage/part so the single directory rename below swaps
+            # data and marker ATOMICALLY; the underscore prefix keeps Spark's
+            # file index from reading it as data (same convention as _SUCCESS)
+            (stage / "part" / HORIZON_MARKER).write_text(str(horizon))
+        trash = proot / f".compact-trash-{root.name}"
+        os.rename(root, trash)
+        os.rename(stage / "part", root)
+        shutil.rmtree(trash)
+        shutil.rmtree(stage, ignore_errors=True)
+        return True
 
 
 #: bits per dimension in the Z-order key (2*16 = 32-bit key)

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..pipeline.similarity import ivf_append, ivfpq_append
+from . import foreach_batch
 
 
 class _IndexMaintainer:
@@ -88,13 +89,7 @@ class _IndexMaintainer:
 
     def start_stream(self, vec_stream: DataFrame, checkpoint: str):
         """Wire a streaming embedding source into the index."""
-        return (
-            vec_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(lambda df, bid: self.process_batch(df, bid) and None)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return foreach_batch(vec_stream, self.process_batch, checkpoint)
 
 
 class IvfIndexMaintainer(_IndexMaintainer):

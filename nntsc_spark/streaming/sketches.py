@@ -9,12 +9,12 @@ merge is element-wise addition: each micro-batch contributes its OWN
 bounded ``depth x width`` sketch, and the current estimate is the sum of
 all batches' cells — never a read-modify-write of shared state.
 
-Write discipline is the streaming-dedup contract (streaming/dedup.py):
-every epoch OVERWRITES exactly its own ``batch=N`` partition, so
-foreachBatch retries re-run the same deterministic build and land on the
-same directory — a crash cannot double-count a batch.  Accumulated
-per-batch partitions fold into the ``batch=-1`` sentinel via the shared
-:func:`~.dedup.compact_batched_table` (stream stopped, same caveats).
+Write discipline is :class:`~..storage.EpochTable`'s: every epoch
+OVERWRITES exactly its own partition, so foreachBatch retries re-run the
+same deterministic build and land on the same directory — a crash cannot
+double-count a batch.  Accumulated per-epoch partitions fold into the
+compaction sentinel with :meth:`~..storage.EpochTable.compact` (stream
+stopped, same caveats).
 
 Merged reads stay cheap at any stream age: the read is at most
 ``n_batches x depth x width`` rows and the combine is one bounded
@@ -26,7 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline.sketches import cms_build, cms_estimate
+from ..pipeline.sketches import cms_build, cms_estimate, hll_build, hll_estimate
+from ..storage import EpochTable
+from . import foreach_batch
 
 SKETCH_SCHEMA = "row int, bucket int, cnt long"
 
@@ -42,55 +44,34 @@ class SketchMaintainer:
         depth: int = 4,
         width: int = 2048,
     ) -> None:
-        self.spark = spark
-        self.path = path
         self.col = col
         self.depth = int(depth)
         self.width = int(width)
+        self._table = EpochTable(spark, path, SKETCH_SCHEMA)
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """One epoch: build this batch's sketch, overwrite batch=N.
+        """One epoch: build this batch's sketch and write it.
 
         Deterministic in the batch's rows, so a foreachBatch retry
         rewrites identical cells — idempotent by construction.
         """
-        sketch = cms_build(batch, self.col, self.depth, self.width)
-        sketch.write.mode("overwrite").parquet(
-            f"{self.path}/batch={int(batch_id)}"
+        self._table.write(
+            cms_build(batch, self.col, self.depth, self.width), batch_id
         )
 
     def attach(self, stream: DataFrame, checkpoint: str, **trigger):
         """Wire onto a streaming DataFrame (one column: ``self.col``)."""
-        return (
-            stream.writeStream.foreachBatch(
-                lambda b, i: self.process_batch(b, i)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
-        )
+        return foreach_batch(stream, self.process_batch, checkpoint, trigger)
 
     def merged(self, as_of_batch: int | None = None) -> DataFrame:
-        """The stream-lifetime sketch: all batches summed cell-wise.
-
-        Explicit schema (not inference) so a crash-left empty partition
-        reads as zero rows, the streaming-dedup lesson.  ``as_of_batch``
-        filters to committed epochs <= it (the compaction sentinel -1
-        always qualifies) — the torn-read escape hatch for reads
-        concurrent with an in-flight epoch's non-atomic batch=N
-        overwrite, same contract as the canonical maintainer's serve
-        path (ValueError below the compaction horizon — see
-        ``dedup.check_as_of_visible``).
-        """
-        from .dedup import check_as_of_visible
-
-        check_as_of_visible(self.path, as_of_batch)
-        df = self.spark.read.schema(SKETCH_SCHEMA + ", batch int").parquet(
-            self.path
+        """The stream-lifetime sketch: all batches (through
+        ``as_of_batch`` if given, see :meth:`EpochTable.read`) summed
+        cell-wise."""
+        return (
+            self._table.read(as_of_batch)
+            .groupBy("row", "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-        if as_of_batch is not None:
-            df = df.where(F.col("batch") <= int(as_of_batch))
-        return df.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
 
     def estimate(
         self, probes: DataFrame, as_of_batch: int | None = None
@@ -103,16 +84,9 @@ class SketchMaintainer:
         )
 
     def compact(self, target_bytes: int = 128 << 20) -> bool:
-        """Fold per-batch partitions into the batch=-1 sentinel (run with
-        the stream STOPPED; see compact_batched_table's contract)."""
-        import os
-
-        from .dedup import compact_batched_table
-
-        parent, name = os.path.split(self.path.rstrip("/"))
-        return compact_batched_table(
-            self.spark, parent, name, SKETCH_SCHEMA, target_bytes
-        )
+        """Fold per-epoch partitions into the sentinel (stream STOPPED;
+        see :meth:`EpochTable.compact`)."""
+        return self._table.compact(target_bytes)
 
 
 HLL_SCHEMA = "register int, max_rho int"
@@ -145,49 +119,28 @@ class HllMaintainer:
         col: str = "k",
         p: int = 10,
     ) -> None:
-        self.spark = spark
-        self.path = path
         self.col = col
         self.p = int(p)
+        self._table = EpochTable(spark, path, HLL_SCHEMA)
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from ..pipeline.sketches import hll_build
-
-        sketch = hll_build(batch, self.col, p=self.p)
-        sketch.write.mode("overwrite").parquet(
-            f"{self.path}/batch={int(batch_id)}"
-        )
+        self._table.write(hll_build(batch, self.col, p=self.p), batch_id)
 
     def attach(self, stream: DataFrame, checkpoint: str, **trigger):
         """Wire onto a streaming DataFrame (one column: ``self.col``)."""
-        return (
-            stream.writeStream.foreachBatch(
-                lambda b, i: self.process_batch(b, i)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
-        )
+        return foreach_batch(stream, self.process_batch, checkpoint, trigger)
 
     def merged(self, as_of_batch: int | None = None) -> DataFrame:
         """Stream-lifetime registers: element-wise max over all epochs
-        (through ``as_of_batch`` if given — the committed-prefix
-        torn-read contract, see SketchMaintainer.merged; ValueError
-        below the compaction horizon)."""
-        from .dedup import check_as_of_visible
-
-        check_as_of_visible(self.path, as_of_batch)
-        df = self.spark.read.schema(HLL_SCHEMA + ", batch int").parquet(
-            self.path
+        (through ``as_of_batch`` if given, see :meth:`EpochTable.read`)."""
+        return (
+            self._table.read(as_of_batch)
+            .groupBy("register")
+            .agg(F.max("max_rho").alias("max_rho"))
         )
-        if as_of_batch is not None:
-            df = df.where(F.col("batch") <= int(as_of_batch))
-        return df.groupBy("register").agg(F.max("max_rho").alias("max_rho"))
 
     def estimate(self, as_of_batch: int | None = None) -> float:
         """Current distinct-count estimate (one bounded-row collect)."""
-        from ..pipeline.sketches import hll_estimate
-
         return float(
             hll_estimate(self.merged(as_of_batch), p=self.p).collect()[0][
                 "hll_ndv"
@@ -195,13 +148,6 @@ class HllMaintainer:
         )
 
     def compact(self, target_bytes: int = 128 << 20) -> bool:
-        """Fold per-batch partitions into the batch=-1 sentinel (stream
-        STOPPED; compact_batched_table's contract)."""
-        import os
-
-        from .dedup import compact_batched_table
-
-        parent, name = os.path.split(self.path.rstrip("/"))
-        return compact_batched_table(
-            self.spark, parent, name, HLL_SCHEMA, target_bytes
-        )
+        """Fold per-epoch partitions into the sentinel (stream STOPPED;
+        see :meth:`EpochTable.compact`)."""
+        return self._table.compact(target_bytes)

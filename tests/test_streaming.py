@@ -1255,7 +1255,7 @@ def test_compaction_horizon_rejects_pre_horizon_as_of(spark, tmp_path):
     re-compactions."""
     import pytest
 
-    from nntsc_spark.streaming.dedup import compaction_horizon
+    from nntsc_spark.storage import compaction_horizon
     from nntsc_spark.streaming.sketches import SketchMaintainer
 
     sm = SketchMaintainer(spark, str(tmp_path / "cms"), depth=3, width=16)
@@ -1306,9 +1306,9 @@ def test_compaction_horizon_guards_every_maintainer_serve(spark, tmp_path):
     read) makes a pre-horizon as_of raise on each of them."""
     import pytest
 
+    from nntsc_spark.storage import HORIZON_MARKER
     from nntsc_spark.streaming.canonical import CanonicalMapMaintainer
     from nntsc_spark.streaming.dedup import (
-        HORIZON_MARKER,
         IncrementalDeduper,
         IncrementalSpanIndex,
     )
@@ -1342,6 +1342,53 @@ def test_compaction_horizon_guards_every_maintainer_serve(spark, tmp_path):
     ):
         with pytest.raises(ValueError, match="horizon 5"):
             serve(as_of_batch=4)
+
+
+@pytest.mark.parametrize("serve", ["cms_merged", "hll_estimate", "vocab"])
+def test_maintainer_serves_empty_state_before_first_epoch(
+    spark, tmp_path, serve
+):
+    """A maintainer whose state table has a known schema serves empty
+    state before its first epoch commits, instead of PATH_NOT_FOUND."""
+    from nntsc_spark.streaming.canonical import CanonicalMapMaintainer
+    from nntsc_spark.streaming.sketches import HllMaintainer, SketchMaintainer
+
+    path = str(tmp_path / "state")
+    if serve == "cms_merged":
+        assert SketchMaintainer(spark, path).merged().count() == 0
+    elif serve == "hll_estimate":
+        assert HllMaintainer(spark, path).estimate() == 0.0
+    else:
+        assert CanonicalMapMaintainer(spark, path).vocab().count() == 0
+
+
+def test_hll_estimate_over_an_empty_epoch_is_zero(spark, tmp_path):
+    """An epoch with no rows writes zero registers; the estimate over
+    them is 0.0 on the stream side and on the batch side alike."""
+    from nntsc_spark.pipeline.sketches import hll_build, hll_estimate
+    from nntsc_spark.streaming.sketches import HllMaintainer
+
+    empty = spark.createDataFrame([], "k string")
+    hm = HllMaintainer(spark, str(tmp_path / "hll"), p=8)
+    hm.process_batch(empty, 0)
+    assert hm.estimate() == 0.0
+    batch = hll_estimate(hll_build(empty, "k", p=8), p=8).collect()
+    assert [r.hll_ndv for r in batch] == [0.0]
+
+
+def test_span_index_serves_crash_residue_as_empty(spark, tmp_path):
+    """A spans partition left holding only an uncommitted ``_temporary/``
+    (a writer that died mid-job) reads as zero rows: the serve path uses
+    the known schema instead of inferring one from no data files."""
+    from nntsc_spark.streaming.dedup import IncrementalSpanIndex
+
+    idx = IncrementalSpanIndex(
+        spark, str(tmp_path / "sidx"), str(tmp_path / "spans"), w=3
+    )
+    (tmp_path / "spans" / "batch=0" / "_temporary").mkdir(parents=True)
+    got = idx.spans()
+    assert got.count() == 0
+    assert got.columns == ["doc_id", "span_start", "span_end", "n_windows"]
 
 
 def test_streaming_gap_detect_closed_and_open_channels(spark, tmp_path):
